@@ -13,10 +13,18 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * exits nonzero — a breakage must never read as a speedup.
   * (See the scheduling comment in main for how passes are laid out
   * against host contention phases and heavy-neighbor pollution.)
-  * Prints ONE JSON line; `value` is the suite total over the 24
-  * BASELINE-comparable queries (Q1–Q15, S1–S3, S5, L1–L5) so the 2×
-  * rule compares like for like; every query's timing is still in
-  * `queries` (CDC throughput fixture = c2 at 100k events on sf0.1).
+  * Prints ONE compact JSON summary line on stdout and writes the full
+  * per-entry JSON to `SPARK_GRAFT_BENCH_OUT`; `value` is the suite
+  * total over the 24 BASELINE-comparable queries (Q1–Q15, S1–S3, S5,
+  * L1–L5) so the 2× rule compares like for like; every query's timing
+  * is in the full JSON's `queries` (CDC throughput fixture = c2 at
+  * 100k events on sf0.1).
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_LOCAL_DIR`, `SPARK_GRAFT_BENCH_OUT` (paths and size),
+  * `SPARK_GRAFT_ONLY`, `SPARK_GRAFT_PASSES` (dev subsets),
+  * `SPARK_GRAFT_BREAK` (failure-gate self-test) and `SPARK_GRAFT_TINY`,
+  * `SPARK_GRAFT_AQE` (the open tiny-exchange-vs-AQE A/B).
   *
   * Prepared-plan execution: each query's COUNT plan is analyzed,
   * optimized and physically planned ONCE, in the untimed warm-up —
@@ -138,8 +146,8 @@ object Bench {
       // (3) an AQE plan's AdaptiveExecutionContext — including its
       // stage-result cache — is a constructor arg, so clone() SHARES
       // it: every later pass would silently reuse the materialized
-      // shuffle stages of the first (measured under
-      // SPARK_GRAFT_SESSION=default: 'prepared' 2.2 s vs 7.0 s honest
+      // shuffle stages of the first (measured under an untuned AQE-on
+      // session, BASELINE.md §3: 'prepared' 2.2 s vs 7.0 s honest
       // whole-function — a fake 3×). AQE sessions take legacy timing.
       if (p.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
         throw new IllegalStateException("AQE plan shares stage cache across clones")
@@ -147,78 +155,60 @@ object Bench {
     remapped
   }
 
-  def main(args: Array[String]): Unit = {
-    // Scratch root for checkpoints/state stores/index warehouses:
-    // DEFAULT OFF as of r16 (VERDICT r15 item 1). r15 silently pointed
-    // java.io.tmpdir at /dev/shm when present; it helped on the build
-    // host but the driver's own 32-core runs regressed the checkpoint/
-    // state-store/epoch-heavy scenarios 2-3.8x round-over-round with a
-    // 4-9x 32c-vs-8c anti-scaling signature — tmpfs pages competing
-    // with the JVM heap for RAM is host-dependent, the guide's classic
-    // local-mode config twiddle. Opt IN via
-    // SPARK_GRAFT_TMPDIR=/dev/shm/graft-tmp on hosts with headroom; a
-    // real cluster points java.io.tmpdir at local SSD either way. The
-    // resolved setting is recorded in the JSON artifact (ADVICE r15).
-    val tmpRoot = sys.env.getOrElse("SPARK_GRAFT_TMPDIR", "off")
-    if (tmpRoot != "off") {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tmpRoot)): Unit
-      System.setProperty("java.io.tmpdir", tmpRoot)
-    }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default = the machine (the driver runs this un-parameterized on
-    // a 32-core box; the per-query sample layout measures the same
-    // totals at local[8] and local[32], so cores only add headroom for
-    // the heavy candidate joins)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // Dev-iteration knobs (driver uses the defaults): restrict to a
-    // comma-separated query subset / fewer timed passes / prep=off to
-    // time the legacy build-plan-execute path for every query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "5").toInt
-    val prepOn = !sys.env.get("SPARK_GRAFT_PREP").contains("off")
-    val gcTeardown = sys.env.get("SPARK_GRAFT_GC").contains("on")
-    // At bench SF most shuffles are small, but the heavy candidate
-    // joins (d1/d3/l2) need the reduce-side parallelism: interleaved
-    // A/Bs put 4 ≈ 8 on the small-query set (±3%, within host noise)
-    // and 8 ahead by 30-40% on the heavy set — so 8. A real cluster
-    // sizes this to data volume; AQE coalesces either way.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    // r11 re-A/B of 4-vs-8 on the binding block (interleaved subset
-    // runs, 2026-08-14): an initial 3-run sweep read 4 ahead by 3-6%,
-    // but a second interleaved pair put 8 ahead once and 4 ahead once
-    // with d8 flat across all — the difference dissolves into the
-    // subset protocol's ±8% JIT-cold noise, confirming the original
-    // "4 ≈ 8" A/B above. The per-block knob is kept for experiments
-    // (partition count is a PLAN-time setting, so the binding block
-    // can compile under its own value) but DEFAULTS to the global —
-    // no behavior change without evidence.
-    val baselineShuffle =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BASELINE", shuffleParts)
-    // Scenario-block shuffle/STATE partitions (r16, VERDICT r15 items
-    // 3–4): a stateful micro-batch opens (stores × partitions) state
-    // stores per batch and pays each one a load→update→commit-delta
-    // chain — ProbeStreamFloor measured 4 stores × 8 partitions × 12
-    // batches ≈ 384 store commits on s12, with the commit chain the
-    // per-batch floor. The feeds are ~10⁵ rows total, so partitions
-    // should be sized to STATE VOLUME, not core count: 4 halves the
-    // store fan-out and was the measured sweet spot (s12 wall at 32c:
-    // 8 parts 11.2–12.6 s, 4 parts 7.8–10.8 s, 2 parts ≈ 4 — same-era
-    // interleaved pairs), and 8c numbers hold (see OPTIMIZATION_r16).
-    // Session conf, not a plan property: outputs are partition-count-
-    // invariant (oracles + golden hashes re-checked); a production
-    // stream sizes this to its own state volume.
-    val scenarioShuffle =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_SCENARIO", "4")
-    // Shuffle/spill files on tmpfs when available: at bench SF the
-    // shuffles are tiny, so file-creation latency (not bandwidth)
-    // dominates — RAM-backed local dirs shave it. A real cluster
-    // points this at local SSDs; it is an env concern, not a plan one.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-      else System.getProperty("java.io.tmpdir"))
-    val xconf = !sys.env.get("SPARK_GRAFT_XCONF").contains("off")
+  /** Worker threads: `SPARK_GRAFT_CPUS`, default the machine (the
+    * per-query sample layout measures the same totals at local[8] and
+    * local[32], so cores only add headroom for the heavy candidate
+    * joins). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  // At bench SF most shuffles are small, but the heavy candidate
+  // joins (d1/d3/l2) need the reduce-side parallelism: interleaved
+  // A/Bs put 4 ≈ 8 on the small-query set (±3%, within host noise)
+  // and 8 ahead by 30-40% on the heavy set — so 8. A real cluster
+  // sizes this to data volume; AQE coalesces either way. An r11
+  // re-A/B of 4-vs-8 on the binding block alone dissolved into the
+  // subset protocol's ±8% JIT-cold noise, so that block uses 8 too.
+  private val QueryShuffle = "8"
+  // Scenario-block shuffle/STATE partitions (r16, VERDICT r15 items
+  // 3–4): a stateful micro-batch opens (stores × partitions) state
+  // stores per batch and pays each one a load→update→commit-delta
+  // chain — 4 stores × 8 partitions × 12 batches ≈ 384 store commits
+  // on s12, with the commit chain the per-batch floor
+  // (OPTIMIZATION_r16.md §3). The feeds are ~10⁵ rows total, so
+  // partitions should be sized to STATE VOLUME, not core count: 4
+  // halves the store fan-out and was the measured sweet spot (s12
+  // wall at 32c: 8 parts 11.2–12.6 s, 4 parts 7.8–10.8 s, 2 parts ≈ 4
+  // — same-era interleaved pairs, OPTIMIZATION_r16.md §5), and 8c
+  // numbers hold. Session conf, not a plan property: outputs are
+  // partition-count-invariant (oracles + golden hashes re-checked); a
+  // production stream sizes this to its own state volume.
+  private val ScenarioShuffle = "4"
+
+  /** `spark.sql.shuffle.partitions` for one entry. It is a PLAN-time
+    * setting, so prepared plans bake it in at compile time and legacy
+    * runs re-assert it per run. */
+  private[graft] def shufflePartitionsFor(name: String): String =
+    if (ScenarioSet(name)) ScenarioShuffle else QueryShuffle
+
+  /** The bench session profile. Bench times with it and PlanDump dumps
+    * plans with it, so a dumped plan is by construction the plan the
+    * bench runs. Every value is session config, not a plan property. */
+  def sessionConf(cpus: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false",
+    // Tiny-exchange elimination (TinyExchangeElimination): static
+    // single-partition plans for dim-sized inputs — the bench session
+    // has AQE off, so the adaptive coalescer cannot make this call at
+    // runtime; the rule makes it at plan time from file-scan stats.
+    // Interleaved A/B (r12, whole-function, 23 binding queries ×7):
+    // 3.60 s off → 2.96 s on, zero result diffs, l2's fan-out
+    // preserved. SPARK_GRAFT_TINY=off reverts for A/B.
+    "spark.graft.tinyExchange.enabled" ->
+      (!sys.env.get("SPARK_GRAFT_TINY").contains("off")).toString,
+    "spark.sql.shuffle.partitions" -> QueryShuffle,
     // AQE OFF for the bench session: every join in the suite already
     // declares its broadcast/shuffle strategy statically (explicit
     // broadcast() on dims, 256 MB static threshold for the rest), so
@@ -227,61 +217,65 @@ object Bench {
     // which doubles multi-stage sub-second queries (l2: 1.57 s → 0.74 s
     // in the same session). At production scale AQE should be ON
     // (skew joins, runtime coalescing) — it is a session config, not a
-    // plan property; Verify keeps the default-on path covered.
-    // SPARK_GRAFT_SESSION=default: an UNTUNED session — Spark defaults
-    // for shuffle partitions (200), AQE (on), broadcast threshold
-    // (10 MB), compression, locality wait, join strategy, local dirs —
-    // only correctness-required configs kept (UTC, nanosAsLong, UI
-    // off). This quantifies the whole tuned-vs-default session gap on
-    // the suite total for BASELINE.md §3; every per-config rationale
-    // stays documented at its line below.
-    val defaultSession = sys.env.get("SPARK_GRAFT_SESSION").contains("default")
-    // Tiny-exchange elimination (TinyExchangeElimination): static
-    // single-partition plans for dim-sized inputs — the bench session
-    // has AQE off, so the adaptive coalescer cannot make this call at
-    // runtime; the rule makes it at plan time from file-scan stats.
-    // Interleaved A/B (r12, whole-function, 23 binding queries ×7):
-    // 3.60 s off → 2.96 s on, zero result diffs, l2's fan-out
-    // preserved. SPARK_GRAFT_TINY=off reverts for A/B.
-    val tinyOn = !sys.env.get("SPARK_GRAFT_TINY").contains("off")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (defaultSession) b0 else b0
-      .config("spark.graft.tinyExchange.enabled", tinyOn.toString)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      // SPARK_GRAFT_AQE=on: the item-7 A/B cell — same session, AQE's
-      // runtime coalescing in place of the static tiny-exchange rule
-      // (the rule skips AQE sessions; see TinyExchangeElimination).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.get("SPARK_GRAFT_AQE").contains("on").toString)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", (256L << 20).toString))
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        sys.env.getOrElse("SPARK_GRAFT_PQBATCH", "4096"))
-      // local mode: every task is process-local; never wait on locality
-      .config("spark.locality.wait", "0")
-      // un-hinted shuffle joins: hash, not sort-merge — the suite's
-      // shuffle joins build on bounded aggregates (vocab, candidate
-      // sets), where SHJ skips two sorts. Session conf, not a plan
-      // property: a cluster keeps SMJ for unbounded build sides.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // the SQL-start listener event embeds a plan description even
-      // with the UI off; "simple" keeps that string cheap (the
-      // formatted tree walk is measurable on the bigger plans).
-      // Shuffle/broadcast compression off: sub-megabyte payloads on
-      // tmpfs, the codec only costs CPU. (SPARK_GRAFT_XCONF=off
-      // reverts both for A/B under load.)
-      .config("spark.sql.ui.explainMode",
-        if (xconf) "simple" else "formatted")
-      .config("spark.shuffle.compress", (!xconf).toString)
-      .config("spark.shuffle.spill.compress", (!xconf).toString)
-      .config("spark.broadcast.compress", (!xconf).toString)
-      .config("spark.local.dir", localDir)
-    ).getOrCreate()
+    // plan property; Verify keeps the default-on path covered. The
+    // whole tuned-vs-untuned session gap is quantified in BASELINE.md
+    // §3. SPARK_GRAFT_AQE=on: the item-7 A/B cell — same session,
+    // AQE's runtime coalescing in place of the static tiny-exchange
+    // rule (the rule skips AQE sessions; see TinyExchangeElimination).
+    "spark.sql.adaptive.enabled" ->
+      sys.env.get("SPARK_GRAFT_AQE").contains("on").toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> (256L << 20).toString,
+    // local mode: every task is process-local; never wait on locality
+    "spark.locality.wait" -> "0",
+    // un-hinted shuffle joins: hash, not sort-merge — the suite's
+    // shuffle joins build on bounded aggregates (vocab, candidate
+    // sets), where SHJ skips two sorts. Session conf, not a plan
+    // property: a cluster keeps SMJ for unbounded build sides.
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    // the SQL-start listener event embeds a plan description even
+    // with the UI off; "simple" keeps that string cheap (the
+    // formatted tree walk is measurable on the bigger plans).
+    // Shuffle/broadcast compression off: sub-megabyte payloads on
+    // tmpfs, the codec only costs CPU.
+    "spark.sql.ui.explainMode" -> "simple",
+    "spark.shuffle.compress" -> "false",
+    "spark.shuffle.spill.compress" -> "false",
+    "spark.broadcast.compress" -> "false",
+    // Shuffle/spill files on tmpfs when available: at bench SF the
+    // shuffles are tiny, so file-creation latency (not bandwidth)
+    // dominates — RAM-backed local dirs shave it. A real cluster
+    // points this at local SSDs; it is an env concern, not a plan one.
+    "spark.local.dir" -> sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
+      else System.getProperty("java.io.tmpdir")))
+
+  /** A session with the engine's extensions and [[sessionConf]]. */
+  def session(cpus: String): SparkSession =
+    sessionConf(cpus).foldLeft(
+      SparkSession.builder().withExtensions(new GraftExtensions)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    // Scratch root for checkpoints/state stores/index warehouses is
+    // the JVM's java.io.tmpdir. r15 silently pointed it at /dev/shm;
+    // it helped on the build host but the driver's own 32-core runs
+    // regressed the checkpoint/state-store/epoch-heavy scenarios
+    // 2-3.8x round-over-round with a 4-9x 32c-vs-8c anti-scaling
+    // signature — tmpfs pages competing with the JVM heap for RAM is
+    // host-dependent, the guide's classic local-mode config twiddle —
+    // so r16 reverted it (OPTIMIZATION_r16.md §1). A host with
+    // headroom passes -Djava.io.tmpdir=… in the run JVM's options
+    // (build.sbt); the resolved value is recorded in the JSON artifact
+    // (ADVICE r15).
+    val tmpRoot = System.getProperty("java.io.tmpdir")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = Bench.cpus
+    // Dev-iteration knobs (driver uses the defaults): restrict to a
+    // comma-separated query subset / fewer timed passes.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "5").toInt
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
 
@@ -292,16 +286,12 @@ object Bench {
     final case class Runnable(name: String, run: () => Long,
         prepared: Boolean = false)
 
-    // Per-block shuffle-partition selection (see baselineShuffle).
-    // Prepared plans bake the value at compile time (confFor runs
-    // before prepare/legacy construction below); legacy runnables
-    // build their plan inside the timed pass, so they re-assert it
-    // per run. Runs are strictly sequential — no conf races.
+    // Prepared plans bake the partition count at compile time (confFor
+    // runs before prepare/legacy construction below); legacy runnables
+    // build their plan inside the timed pass, so they re-assert it per
+    // run. Runs are strictly sequential — no conf races.
     def confFor(name: String): Unit =
-      spark.conf.set("spark.sql.shuffle.partitions",
-        if (BaselineSet(name)) baselineShuffle
-        else if (ScenarioSet(name)) scenarioShuffle
-        else shuffleParts)
+      spark.conf.set("spark.sql.shuffle.partitions", shufflePartitionsFor(name))
 
     def legacy(qd: QueryDef): Runnable =
       Runnable(qd.name, () => { confFor(qd.name); qd.fn(spark, sfDir).count() })
@@ -381,10 +371,8 @@ object Bench {
       // was A/B'd in r6 and made the BASELINE TOTAL 0.8–1.3 s WORSE
       // at both local[8] and local[32] (full G1 collection on the 20g
       // heap shrinks/uncommits regions, and the next timed query pays
-      // the recommit) — so the teardown only clears the cache and the
-      // GC stays opt-in (SPARK_GRAFT_GC=on) for experiments.
+      // the recommit) — so the teardown only clears the cache.
       spark.catalog.clearCache()
-      if (gcTeardown) System.gc()
       if (ok) dt else -1.0
     }
 
@@ -402,8 +390,7 @@ object Bench {
     val runnables = defs.map { qd =>
       confFor(qd.name) // plan-time setting for the prepare path
       if (broken(qd.name)) brokenRunnable(qd.name)
-      else if (prepOn) try prepare(qd) catch { case _: Throwable => legacy(qd) }
-      else legacy(qd)
+      else try prepare(qd) catch { case _: Throwable => legacy(qd) }
     }
     // BASELINE.md method = min of N after warm-up (N=5 here, ≥ the
     // method's 3). Scheduling is shaped by two measured hazards:
@@ -457,8 +444,7 @@ object Bench {
     // the query. Scenario entries are never re-prepared (their builders
     // run whole streaming scenarios).
     def reprepare(rs: Seq[Runnable]): Seq[Runnable] =
-      if (!prepOn) rs
-      else rs.map { r =>
+      rs.map { r =>
         if (r.prepared) r
         else defs.find(_.name == r.name).fold(r) { qd =>
           confFor(qd.name)
@@ -493,16 +479,12 @@ object Bench {
     // query's samples consecutively re-pays it once per HALF, and the
     // min keeps the hot samples. The two halves stay far apart in
     // time, preserving the slow-phase hedge.
-    // (SPARK_GRAFT_LAYOUT=interleaved restores full-pass rotation.)
-    val aPasses = sys.env.getOrElse("SPARK_GRAFT_BASELINE_PASSES", "3").toInt
+    val aPasses = 3
     val aFront = (aPasses + 1) / 2
-    val perQuery = !sys.env.get("SPARK_GRAFT_LAYOUT").contains("interleaved")
-    def runPass(rs: Seq[Runnable]): Map[String, Double] = runPassOf(rs)
-    def runHalf(rs: Seq[Runnable], k: Int): Seq[Map[String, Double]] =
-      if (perQuery) {
-        val samples = rs.map(r => r.name -> (1 to k).map(_ => once(r)))
-        (0 until k).map(i => samples.map { case (n, ts) => n -> ts(i) }.toMap)
-      } else (1 to k).map(_ => runPass(rs))
+    def runHalf(rs: Seq[Runnable], k: Int): Seq[Map[String, Double]] = {
+      val samples = rs.map(r => r.name -> (1 to k).map(_ => once(r)))
+      (0 until k).map(i => samples.map { case (n, ts) => n -> ts(i) }.toMap)
+    }
     val passes =
       runHalf(blockA, aFront) ++
         runHalf(blockB, nPasses) ++
@@ -540,22 +522,19 @@ object Bench {
     // Continuity with the r1–r4 methodology (BASELINE.md §3): the same
     // suite total under legacy whole-function timing — analyze/
     // optimize/plan INSIDE the timer — min of 3 passes at the end of
-    // the run. When prep is already off, `value` IS whole-function.
-    // The loud-failure contract covers this continuity metric too: a
+    // the run. The loud-failure contract covers this continuity metric too: a
     // query with zero successful legacy samples joins the failure list
     // (rc≠0) instead of silently shrinking the sum — and a
     // SPARK_GRAFT_BREAK query stays broken here, so the self-test
     // exercises this path as well.
-    val (wholeFnTotal, wholeFnFailed) =
-      if (!prepOn) (total, Seq.empty[String])
-      else {
-        val lr = defs.filter(qd => BaselineSet(qd.name)).map(qd =>
-          if (broken(qd.name)) brokenRunnable(qd.name) else legacy(qd))
-        val lp = (1 to 3).map(_ => runPass(lr))
-        val perQ = lr.map(r => r.name -> lp.flatMap(_.get(r.name)).filter(_ >= 0))
-        (perQ.collect { case (_, ts) if ts.nonEmpty => ts.min }.sum,
-          perQ.collect { case (n, ts) if ts.isEmpty => n })
-      }
+    val (wholeFnTotal, wholeFnFailed) = {
+      val lr = defs.filter(qd => BaselineSet(qd.name)).map(qd =>
+        if (broken(qd.name)) brokenRunnable(qd.name) else legacy(qd))
+      val lp = (1 to 3).map(_ => runPassOf(lr))
+      val perQ = lr.map(r => r.name -> lp.flatMap(_.get(r.name)).filter(_ >= 0))
+      (perQ.collect { case (_, ts) if ts.nonEmpty => ts.min }.sum,
+        perQ.collect { case (n, ts) if ts.isEmpty => n })
+    }
     // CDC throughput vs BASELINE.md §1 (c2 = forward render of the
     // 100k-event fixture at sf0.1, 10k at smaller SFs)
     val cdcEvents = if (sfDir.contains("0.1")) 100000 else 10000
@@ -563,7 +542,7 @@ object Bench {
       .filter(_ > 0).map(t => (cdcEvents / t).round).getOrElse(-1L)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val wfFailedJson = wholeFnFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val layout = if (perQuery) "per_query" else "interleaved"
+    val layout = "per_query"
     val scens = scenResults.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val scensMedian = scenSamples
@@ -577,12 +556,11 @@ object Bench {
     val runUtc = java.time.Instant.now().toString
     val repreparedJson = reprepared.map("\"" + _ + "\"").mkString("[", ",", "]")
     val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","run_utc":"$runUtc","total_whole_function":$wholeFnTotal,"queries":$qs,"queries_median":$qsMedian,"scenarios":$scens,"scenarios_median":$scensMedian,"failed":$failedJson,"failed_whole_function":$wfFailedJson,"layout":"$layout","samples_baseline":$aPasses,"samples_extras":$nPasses,"sf":"$sfDir","cdc_events_per_sec":$cdcRate,"cpus":$cpus,"tmpdir":"$tmpRoot","reprepared":$repreparedJson}"""
-    println(jsonLine)
-    // The binding 2× verdict lives in `value`/`total_whole_function` at
-    // the FRONT of this (very long) line; two rounds of driver
-    // artifacts kept only the tail and truncated the verdict away.
-    // Persist the complete JSON to a committed repo file so the bench
-    // outcome is always readable without a re-run.
+    // The full line is ~7-14 KB: two rounds of driver artifacts kept
+    // only the stdout tail and truncated the verdict at its front
+    // away. It goes ONLY to a committed repo file, so the bench outcome
+    // is always readable without a re-run and stdout carries exactly
+    // one "metric":"total" line (the summary below).
     // A subset run (SPARK_GRAFT_ONLY) must NEVER overwrite the
     // committed full-suite artifact: r14 ended with a 2-query sentinel
     // probe committed as bench_full.json while the real run sat
@@ -604,25 +582,28 @@ object Bench {
     catch { case e: java.io.IOException =>
       System.err.println(s"bench_full write failed ($benchOut): $e") }
     // COMPACT summary as the FINAL stdout line (VERDICT r15 item 2):
-    // the full JSON line above is ~7-14 KB and the driver keeps only a
-    // 2000-byte stdout tail, so since r13 the driver's PERF parsed
-    // nothing (`parsed: null`). This line carries the binding verdict
-    // (value, whole-function continuity total), the per-block sums,
-    // the failure lists, and the self-describing metadata (tmpdir,
-    // flipped-to-prepared entries) in well under 2000 bytes; the
-    // complete per-query maps stay in the full line and in $benchOut.
+    // the driver keeps only a 2000-byte stdout tail, so since r13 the
+    // driver's PERF parsed nothing (`parsed: null`). This line carries
+    // the binding verdict (value, whole-function continuity total), the
+    // per-block sums, the failure lists, and the self-describing
+    // metadata (tmpdir, flipped-to-prepared entries) in well under 2000
+    // bytes; the complete per-query maps stay in $benchOut.
     // It deliberately carries NO "queries" map: a truncated per-query
     // map could be misread as entries dropping out of the suite.
     val queriesSum = results.collect { case (_, v) if v >= 0 => v }.sum
     val scenariosSum = scenResults.collect { case (_, v) if v >= 0 => v }.sum
-    def summaryWith(rep: String) = s"""{"metric":"total","value":$total,"unit":"sec","run_utc":"$runUtc","total_whole_function":$wholeFnTotal,"queries_sum":$queriesSum,"scenarios_sum":$scenariosSum,"n_queries":${results.size},"n_scenarios":${scenResults.size},"failed":$failedJson,"failed_whole_function":$wfFailedJson,"cdc_events_per_sec":$cdcRate,"sf":"$sfDir","cpus":$cpus,"tmpdir":"$tmpRoot","layout":"$layout","samples_baseline":$aPasses,"samples_extras":$nPasses,"full_json":"$benchOut","reprepared_n":${reprepared.size},"reprepared":$rep}"""
+    def summaryWith(rep: String, fl: String, wfFl: String) = s"""{"metric":"total","value":$total,"unit":"sec","run_utc":"$runUtc","total_whole_function":$wholeFnTotal,"queries_sum":$queriesSum,"scenarios_sum":$scenariosSum,"n_queries":${results.size},"n_scenarios":${scenResults.size},"failed":$fl,"failed_whole_function":$wfFl,"cdc_events_per_sec":$cdcRate,"sf":"$sfDir","cpus":$cpus,"tmpdir":"$tmpRoot","layout":"$layout","samples_baseline":$aPasses,"samples_extras":$nPasses,"full_json":"$benchOut","reprepared_n":${reprepared.size},"reprepared":$rep}"""
     // the whole point is fitting a 2000-byte tail — if the flipped list
-    // ever grows past that, keep the count and drop the names here
-    // (they remain in the full line and the $benchOut file)
-    val summaryLine = {
-      val s0 = summaryWith(repreparedJson)
-      if (s0.length <= 1900) s0 else summaryWith("[]")
-    }
+    // ever grows past that, keep the count and drop the names here, and
+    // past that turn the failure lists into counts (the names remain
+    // in the $benchOut file)
+    def fits(line: String) =
+      line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= 1900
+    val summaryLine = Seq(
+      summaryWith(repreparedJson, failedJson, wfFailedJson),
+      summaryWith("[]", failedJson, wfFailedJson)
+    ).find(fits).getOrElse(
+      summaryWith("[]", failed.size.toString, wholeFnFailed.size.toString))
     println(summaryLine)
     spark.stop()
     if (failed.nonEmpty || wholeFnFailed.nonEmpty) {

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions.col
   * emits `golden_hashes.json` next to `oracle_sql.json`; ScalaTest
   * (`GoldenHashSpec`) asserts the same equality in-build, so a change
   * to any kernel shows up in BOTH the test run and the round artifact.
+  *
+  * Pinning a new hash: add the entry with a placeholder, run `Verify`
+  * at sf0.01 with `SPARK_GRAFT_ONLY=<name>`, and copy the entry's
+  * `actual` from the `golden_hashes.json` it writes.
   */
 object GoldenHashes {
 
@@ -27,7 +31,8 @@ object GoldenHashes {
     // (a3/a6 carried goldens through r13; r14 promoted both to a1's
     // full DuckDB oracle the same way — a3 at nProbe=15 of 16 and a6
     // at m=16/rerank×k=250, each measured candidate-complete at all
-    // three SFs (ProbeA3A6) with exact re-rank — goldens retired.)
+    // three SFs (COVERAGE.md, ANN IVF and ANN PQ rows) with exact
+    // re-rank — goldens retired.)
     "d2_simhash_neardup" -> "9015cca605744505da026aa9349f99673d2d36c6c3c04cc583d1cf8d2309bc35",
     // streaming-only surface (S4 watermark late-drop, S6 keyed state):
     // fixed MemoryStream scenarios, SF-independent by design — see

@@ -1,37 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch: dump `.explain("formatted")` for named queries to
   * files under PD_OUT (default plans/r15), one `<query>_<tag>.txt`
   * each — the judge-checkable plan artifacts for the optimization
-  * rounds. The session mirrors the bench session (extensions, shuffle
-  * partitions, AQE off, 256 MB broadcast threshold, SMJ off) so the
-  * dumped plan is the one the bench actually executes.
+  * rounds. The session is Bench's own ([[Bench.session]]), and each
+  * query plans under its bench shuffle-partition count, so the dumped
+  * plan is the one the bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("PD_SF", "/root/testdata/sf0.1")
     val tag = sys.env.getOrElse("PD_TAG", "before")
     val out = sys.env.getOrElse("PD_OUT", "plans/r15")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.tinyExchange.enabled",
-        (!sys.env.get("SPARK_GRAFT_TINY").contains("off")).toString)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     args.foreach { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", Bench.shufflePartitionsFor(n))
       val txt =
         try SparkEntry.queries(n)(spark, sf).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

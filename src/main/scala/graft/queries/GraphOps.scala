@@ -54,9 +54,10 @@ object GraphOps {
     * exactly once regardless), then one distinct. One exchange fewer
     * than the self-join twin below and no dual sort of the line-grain
     * fact: measured 2.09 vs 2.84 s warm / 3.78 vs 7.45 s cold at
-    * sf0.1, identical edge sets (ProbeGraph, exceptAll both ways =
-    * 0). The oracle keeps the self-join form — cross-engine
-    * agreement between the two constructions is part of the check. */
+    * sf0.1, identical edge sets (GraphOpsSpec pins the equality
+    * against the self-join twin). The oracle keeps the self-join form
+    * — cross-engine agreement between the two constructions is part
+    * of the check. */
   def coPurchaseEdges(lineitem: DataFrame): DataFrame =
     coPurchaseEdgesWeighted(lineitem).select("src", "dst")
 
@@ -128,7 +129,7 @@ object GraphOps {
   }
 
   /** Self-join twin of [[coPurchaseEdges]] — the reference
-    * construction the equality spec and ProbeGraph compare against. */
+    * construction the GraphOpsSpec equality spec compares against. */
   private[graft] def coPurchaseEdgesJoin(lineitem: DataFrame): DataFrame = {
     val a = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("src"))
     val b = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("dst"))
@@ -147,10 +148,10 @@ object GraphOps {
   /** The small-graph probe: a cheap count decides the path, then ONE
     * full-parallelism primitive collect fetches the edge set.
     * `Some((srcs, dsts))` = the WHOLE edge set (≤ limit, safe to fold
-    * on the driver); `None` = over the bound — caller takes the
-    * distributed path. The cap keeps the driver safe at any scale: a
-    * 100 TB graph answers the count and returns `None`, the edges
-    * never materialize.
+    * on the driver); `None` = over the bound, or an edge with a null
+    * endpoint — caller takes the distributed path. The cap keeps the
+    * driver safe at any scale: a 100 TB graph answers the count and
+    * returns `None`, the edges never materialize.
     *
     * r15 (guide §1.2 per-task / §5 driver): the old form collected
     * `limit + 1` rows through CollectLimit, whose incremental
@@ -187,20 +188,20 @@ object GraphOps {
         val sb = new scala.collection.mutable.ArrayBuilder.ofLong
         val db = new scala.collection.mutable.ArrayBuilder.ofLong
         var n = 0
-        var over = false
-        while (it.hasNext && !over) {
+        var bail = false
+        while (it.hasNext && !bail) {
           val r = it.next()
-          if (r.isNullAt(0) || r.isNullAt(1))
-            throw new NullPointerException(
-              "null src/dst in graph edge table")
-          if (n > cap) over = true
+          // A null endpoint cannot enter the primitive arrays; the
+          // distributed path applies SQL null semantics to it, so
+          // routing there keeps both paths' answers equal.
+          if (r.isNullAt(0) || r.isNullAt(1) || n > cap) bail = true
           else {
             sb += r.getLong(0)
             db += r.getLong(1)
             n += 1
           }
         }
-        Iterator((sb.result(), db.result(), over))
+        Iterator((sb.result(), db.result(), bail))
       }.collect()
     if (parts.exists(_._3)) return None
     val n = parts.iterator.map(_._1.length).sum

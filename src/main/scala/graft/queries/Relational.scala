@@ -97,17 +97,17 @@ object Relational {
       // at bench SF), but the 10× corpus exposed the broadcast path's
       // scale cliff: a BroadcastExchange builds its HashedRelation
       // single-threaded on the driver, and at sf1 the 1.5M-row orders
-      // build alone costs ~1.1 s of q04's ~1.0 s wall (ProbeQ04c,
-      // collect 0.28 s + build/broadcast 0.8 s) while DuckDB's
-      // partitioned build takes ~30 ms. shuffle_hash builds the same
+      // build alone costs ~1.1 s of q04's ~1.0 s wall (collect 0.28 s
+      // + build/broadcast 0.8 s; BASELINE.md §5b, r13 lever (b)) while
+      // DuckDB's partitioned build takes ~30 ms. shuffle_hash builds the same
       // table in parallel across reducers — the join a 100 TB plan
       // uses anyway (orders is far over any sane threshold there, and
       // orderkey is unique, so skew-free). The order-grain partial
       // aggregate (exact for SUM) collapses in the scan tasks and cuts
       // the fact bytes entering that exchange 4×; its output is
       // already hash-partitioned on the join key, so the agg and the
-      // join share ONE shuffle of each side. Interleaved ProbeQ04c
-      // (this era): sf1 0.98 → 0.71 s; sf0.1 0.37 ≈ 0.39 s (wash —
+      // join share ONE shuffle of each side. Interleaved A/B
+      // (BASELINE.md §5b): sf1 0.98 → 0.71 s; sf0.1 0.37 ≈ 0.39 s (wash —
       // the r12 hintless pipeline's bench-SF edge was the broadcast
       // build being tiny THERE, which is exactly what fails to hold
       // at 10×).

@@ -977,11 +977,12 @@ object SimilarityOps {
     // a3 promoted to a1's FULL DuckDB oracle (r14, VERDICT r13 item 2,
     // the a2 promotion path): at nProbe=14 of 16 cells the probed set
     // provably contains every exact top-5 neighbor of this corpus —
-    // measured EXACT at sf0.001/0.01/0.1 (ProbeA3A6); 15 is margin —
-    // and the in-cell scoring is already exact cosine. The dial is
-    // honest about the regime: near-uniform synthetic embeddings are
-    // IVF's worst case (top-5 sims 0.3–0.4 spread across cells, so
-    // coverage needs most of them); real clustered embeddings reach
+    // measured EXACT at sf0.001/0.01/0.1 (COVERAGE.md, ANN IVF row);
+    // 15 is margin — and the in-cell scoring is already exact cosine.
+    // The dial is honest about the regime: near-uniform synthetic
+    // embeddings are IVF's worst case (top-5 sims 0.3–0.4 spread
+    // across cells, so coverage needs most of them); real clustered
+    // embeddings reach
     // the same recall at small nProbe/nList, which is what the
     // default-dial kernel (and its recall spec) continues to serve.
     QueryDef("a3_ann_ivf", ExactTop5OracleSql) { (s, d) =>
@@ -991,9 +992,9 @@ object SimilarityOps {
     // a6 promoted the same way: at m=16 subspaces (4-d sub-quantizers)
     // the ADC ranking is tight enough that a rerank×k=100 shortlist
     // provably covers the exact top-5 — measured EXACT at all three
-    // SFs with rerankFactor=20 (ProbeA3A6); 50 pins 2.5× margin — and
-    // the re-rank stage outputs exact cosines. The m=8 default keeps
-    // the approximate regime honest in its recall spec.
+    // SFs with rerankFactor=20 (COVERAGE.md, ANN PQ row); 50 pins 2.5×
+    // margin — and the re-rank stage outputs exact cosines. The m=8
+    // default keeps the approximate regime honest in its recall spec.
     QueryDef("a6_ann_pq", ExactTop5OracleSql) { (s, d) =>
       annPq(Tables.embeddings(s, d), m = 16, rerankFactor = 50)
     },

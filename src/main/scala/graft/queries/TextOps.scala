@@ -253,8 +253,9 @@ object TextOps {
       // The map-side combine runs INSIDE the kernel: emitting raw
       // (source, term, in-doc count) rows pushed 1.16M tuples through
       // the Dataset encoder at the 10× corpus, and that re-serialization
-      // — not tokenizing — was ~0.5 s of l5's 0.7 s wall (ProbeL5:
-      // decode+tokenize 0.15 s, +row-encode 0.68 s). Combining to
+      // — not tokenizing — was ~0.5 s of l5's 0.7 s wall (decode+
+      // tokenize 0.15 s, +row-encode 0.68 s; BASELINE.md §5b, r13
+      // lever (c), and its §5c re-decomposition). Combining to
       // (source, term, tf, dfp) partials per PARTITION first bounds the
       // encoder traffic by vocabulary × partitions instead of Σ distinct
       // terms per doc — the same partial-aggregation Spark's hash agg

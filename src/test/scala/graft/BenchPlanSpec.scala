@@ -53,8 +53,8 @@ class BenchPlanSpec extends AnyFunSuite {
     // With AQE on, AdaptiveSparkPlanExec carries its execution context
     // (incl. the stage-result cache) as a constructor arg, which
     // clone() SHARES — later passes would reuse the first pass's
-    // materialized shuffles (measured: a fake 3× under
-    // SPARK_GRAFT_SESSION=default). prepare() must fall back to
+    // materialized shuffles (measured: a fake 3× under an AQE-on
+    // session, e.g. SPARK_GRAFT_AQE=on). prepare() must fall back to
     // legacy whole-function timing.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {

@@ -355,6 +355,24 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(fast === dist)
   }
 
+  test("null endpoints: driver fast path routes to the distributed path's answer") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(43)
+    val es = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter(e => e._1 != e._2).map(e => (e._1 min e._2, e._1 max e._2)).distinct
+    val withNulls = (es.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((None, Some(3L)), (Some(5L), None), (None, None))).toDF("src", "dst")
+    def both(f: Long => org.apache.spark.sql.DataFrame) =
+      (f(1L << 24).collect().toSeq, f(0L).collect().toSeq)
+    for ((name, (fast, dist)) <- Seq(
+        "pagerank" -> both(l => GraphOps.pagerank(withNulls, 5, 1000, smallGraphLimit = l)),
+        "triangles" -> both(l => GraphOps.triangleCounts(withNulls, 1000, smallGraphLimit = l)),
+        "bfs" -> both(l => GraphOps.bfsHops(withNulls, 3, 6, smallGraphLimit = l)),
+        "common neighbors" -> both(l =>
+          GraphOps.commonNeighbors(withNulls, 10, 5, smallGraphLimit = l))))
+      assert(fast === dist, name)
+  }
+
   test("pagerank on an empty edge set returns an empty typed frame") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
