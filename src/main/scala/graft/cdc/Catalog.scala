@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Schema-catalog resolution (reference O11/O12). The reference fires
   * two `information_schema` queries per DML event over a live MySQL
@@ -15,13 +16,23 @@ import org.apache.spark.sql.functions._
   * Key resolution: PRI columns if any; else the columns of the first
   * (min index_name — the reference's `LIMIT 1` with no ORDER BY is
   * nondeterministic, we pin it) unique index; else empty = keyless.
+  *
+  * The resolved catalog is materialized ONCE into a driver-local
+  * relation (one row per table): every later use plans a
+  * `LocalTableScan` under the broadcast — no snapshot or JDBC scan, no
+  * shuffle, no re-resolution — in each batch job and in each stream
+  * micro-batch alike, and a live JDBC catalog is read exactly once.
+  * The catalog is a bounded dimension (the `SchemaEvolve` contract:
+  * tables and columns, not rows), so holding it on the driver adds no
+  * scale assumption.
   */
 object Catalog {
 
   /** columns: (table_schema, table_name, column_name, ordinal_position,
     * column_key); statistics: (table_schema, table_name, index_name,
     * non_unique, column_name). Returns one row per table:
-    * (db, table, cols ARRAY<STRUCT<ord,name>>, key_cols ARRAY<STRING>).
+    * (db, table, cols ARRAY<STRUCT<ord,name>>, key_cols ARRAY<STRING>),
+    * collected to the driver and returned as a local relation.
     */
   def resolve(columns: DataFrame, statistics: DataFrame): DataFrame = {
     val cols = columns
@@ -47,12 +58,14 @@ object Catalog {
       .groupBy(col("db"), col("table"))
       .agg(collect_list(col("column_name")).as("uniq_cols"))
 
-    cols.join(uniqueCols, Seq("db", "table"), "left")
+    val resolved = cols.join(uniqueCols, Seq("db", "table"), "left")
       .withColumn("key_cols",
         when(size(col("pk_cols")) > 0, col("pk_cols"))
           .otherwise(coalesce(col("uniq_cols"),
             array().cast("array<string>"))))
       .select("db", "table", "cols", "key_cols")
+    columns.sparkSession.createDataFrame(
+      resolved.collect().toSeq.asJava, resolved.schema)
   }
 
   /** MySQL `information_schema` projections the reference fires per

@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * At scale: binlogs rotate at a fixed size, so arrival rate is files/
   * minute and each micro-batch parses its new files in parallel; the
-  * catalog is a broadcast dimension exactly as in batch.
+  * catalog is a broadcast dimension exactly as in batch. Its static
+  * side is the driver-local relation `Catalog.resolve` returns, so a
+  * micro-batch broadcasts it from the driver and never re-executes
+  * the catalog's scans, aggregates or joins.
   */
 object CdcStream {
 

@@ -851,24 +851,31 @@ object DedupOps {
 
   private def writeLshGeneration(s: org.apache.spark.sql.SparkSession,
       docs: DataFrame, suffix: String): Unit = {
+    // persist across the two leaf writes, as foldLshDeltaEpoch does:
+    // both leaves read the SAME banded frame, and without the cache the
+    // generation build paid the shingle+MinHash kernel twice. A base
+    // generation is corpus-sized, so spill rather than drop blocks.
     val banded = bandedSigs(docs, 8, 4)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // repartition BY THE BUCKET KEY before each bucketed write (r16,
     // guide §6): the kernel's 32-task fanOut otherwise leaves one file
     // per (task, bucket) — measured 254–256 micro-files per table,
     // re-opened by every serve. Murmur3 alignment with the bucket
     // assignment yields exactly one file per bucket.
-    banded.select("doc_id", "b", "h")
-      .repartition(8, col("doc_id"))
-      .write.mode("overwrite")
-      .option("path", s"$LshWarehouse/bands_$suffix")
-      .bucketBy(8, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"graft_lsh_bands_$suffix")
-    banded.filter(col("b") === 0).select("doc_id", "sh")
-      .repartition(8, col("doc_id"))
-      .write.mode("overwrite")
-      .option("path", s"$LshWarehouse/sets_$suffix")
-      .bucketBy(8, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"graft_lsh_sets_$suffix")
+    try {
+      banded.select("doc_id", "b", "h")
+        .repartition(8, col("doc_id"))
+        .write.mode("overwrite")
+        .option("path", s"$LshWarehouse/bands_$suffix")
+        .bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"graft_lsh_bands_$suffix")
+      banded.filter(col("b") === 0).select("doc_id", "sh")
+        .repartition(8, col("doc_id"))
+        .write.mode("overwrite")
+        .option("path", s"$LshWarehouse/sets_$suffix")
+        .bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"graft_lsh_sets_$suffix")
+    } finally banded.unpersist(blocking = false): Unit
   }
 
   /** Build the BASE index once per corpus dir. */

@@ -10,7 +10,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch path, render, and hand ordered micro-batches to a sink
   * callback (`foreachBatch` — e.g. apply to a target DB, append to a
   * log). One file = one complete ordered unit, matching binlog
-  * rotation, so per-file parse needs no cross-batch state.
+  * rotation, so per-file parse needs no cross-batch state. The static
+  * catalog side is the driver-local relation `Catalog.resolve`
+  * returns: each micro-batch broadcasts it from the driver and never
+  * re-executes the catalog's scans, aggregates or joins.
   */
 object CdcStream {
 

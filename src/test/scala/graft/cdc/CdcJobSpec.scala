@@ -97,23 +97,25 @@ class CdcJobSpec extends AnyFunSuite {
     assert(got.last == "use `testdb`;\nalter table t_pk add column extra int;")
   }
 
+  /** One DELETE on a unique-index table, one on a keyless table. */
+  private val keyMatrix =
+    """# at 100
+      |#260812  5:00:00 server id 1  end_log_pos 200 CRC32 0x1 	Delete_rows: table id 1 flags: STMT_END_F
+      |### DELETE FROM `testdb`.`t_uniq`
+      |### WHERE
+      |###   @1=1 /* INT */
+      |###   @2='c1' /* VARSTRING */
+      |###   @3=10 /* INT */
+      |# at 200
+      |#260812  5:00:01 server id 1  end_log_pos 300 CRC32 0x2 	Delete_rows: table id 2 flags: STMT_END_F
+      |### DELETE FROM `testdb`.`t_keyless`
+      |### WHERE
+      |###   @1=5 /* INT */
+      |###   @2=NULL /* INT */
+      |""".stripMargin
+
   test("key matrix: unique fallback and keyless via the catalog join (C4)") {
-    val text =
-      """# at 100
-        |#260812  5:00:00 server id 1  end_log_pos 200 CRC32 0x1 	Delete_rows: table id 1 flags: STMT_END_F
-        |### DELETE FROM `testdb`.`t_uniq`
-        |### WHERE
-        |###   @1=1 /* INT */
-        |###   @2='c1' /* VARSTRING */
-        |###   @3=10 /* INT */
-        |# at 200
-        |#260812  5:00:01 server id 1  end_log_pos 300 CRC32 0x2 	Delete_rows: table id 2 flags: STMT_END_F
-        |### DELETE FROM `testdb`.`t_keyless`
-        |### WHERE
-        |###   @1=5 /* INT */
-        |###   @2=NULL /* INT */
-        |""".stripMargin
-    val got = sqls(CdcJob.run(spark, write("matrix.txt", text),
+    val got = sqls(CdcJob.run(spark, write("matrix.txt", keyMatrix),
       Catalog.fixture(spark)))
     assert(got.head.endsWith("DELETE FROM `testdb`.`t_uniq` WHERE `code`='c1' LIMIT 1;"))
     assert(got(1).endsWith("DELETE FROM `testdb`.`t_keyless` WHERE `a`=5 AND `b` IS NULL LIMIT 1;"))
@@ -389,6 +391,12 @@ class CdcJobSpec extends AnyFunSuite {
     val resolved = Catalog.fromJdbc(spark, url,
       columnsQuery = "SELECT * FROM cat_columns",
       statisticsQuery = "SELECT * FROM cat_statistics")
+    // the catalog is read ONCE, when fromJdbc resolves it: a key added
+    // to the live catalog afterwards must not reach the resolved frame
+    val late = java.sql.DriverManager.getConnection(url)
+    try late.createStatement().executeUpdate("INSERT INTO cat_columns " +
+      "VALUES ('testdb', 't_keyless', 'a', 1, 'PRI')")
+    finally late.close()
     val byTable = resolved.collect()
       .map(r => r.getString(1) -> r.getSeq[String](3)).toMap
     assert(byTable("t_pk") == Seq("id"))        // PK wins
@@ -404,6 +412,50 @@ class CdcJobSpec extends AnyFunSuite {
     // fixture also carries otherdb rows the Derby catalog omits; the
     // representative stream only touches testdb tables, so renders match
     assert(viaJdbc == viaFixture)
+    // t_keyless keeps the full-row WHERE of the catalog as resolved
+    assert(sqls(CdcJob.run(spark, write("jdbc_keyless.txt", keyMatrix),
+      resolved)).last.endsWith(
+      "DELETE FROM `testdb`.`t_keyless` WHERE `a`=5 AND `b` IS NULL LIMIT 1;"))
+  }
+
+  test("a --catalog snapshot resolves once: local relation, no catalog scan or shuffle per render") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the two information_schema snapshots, read the way CdcMain
+    // --catalog COLS,STATS reads them
+    val dir = java.nio.file.Files.createTempDirectory("catsnap")
+    val cols = dir.resolve("columns.csv")
+    val stats = dir.resolve("statistics.csv")
+    java.nio.file.Files.writeString(cols,
+      "table_schema,table_name,column_name,ordinal_position,column_key\n" +
+        "testdb,t_pk,id,1,PRI\ntestdb,t_pk,name,2,\ntestdb,t_pk,score,3,\n" +
+        "testdb,t_uniq,id,1,\ntestdb,t_uniq,code,2,\ntestdb,t_uniq,val,3,\n" +
+        "testdb,t_keyless,a,1,\ntestdb,t_keyless,b,2,\n")
+    java.nio.file.Files.writeString(stats,
+      "table_schema,table_name,index_name,non_unique,column_name\n" +
+        "testdb,t_pk,PRIMARY,0,id\ntestdb,t_uniq,ux_code,0,code\n")
+    def csv(p: java.nio.file.Path) = spark.read.option("header", "true")
+      .option("inferSchema", "true").csv(p.toString)
+    val catalog = Catalog.resolve(csv(cols), csv(stats))
+    assert(catalog.queryExecution.analyzed.isInstanceOf[LocalRelation])
+
+    val binlog = write("snap_matrix.txt", keyMatrix)
+    val out = CdcJob.renderUnordered(CdcJob.parse(spark, binlog), catalog,
+      CdcConfig())
+    assert(out.collect().map(_.getAs[String]("sql")).toSeq.sorted ==
+      sqls(CdcJob.run(spark, binlog, Catalog.fixture(spark))).sorted)
+    // the executed plan: the broadcast side is a LocalTableScan, so the
+    // only file scan is the binlog's and nothing shuffles
+    val plan = out.queryExecution.executedPlan
+    object helper extends AdaptiveSparkPlanHelper
+    assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      plan.treeString)
+    val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.length == 1, plan.treeString)
+    assert(scans.head.relation.location.rootPaths.map(_.getName) ==
+      Seq("snap_matrix.txt"))
   }
 
   test("c-series driver entries return rows") {
